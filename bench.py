@@ -120,6 +120,12 @@ def main() -> None:
     # after the prewarm) therefore times steady-state execution at
     # SF_DIR; first-compile variance remains documented in
     # BENCH/bisect_kg_pipeline.md and BENCH/codegen_shapes.md.
+    # The prewarm only holds while the compiled classes stay cached:
+    # Spark's default 100-entry codegen cache is smaller than one
+    # kg_pipeline pass's ~300 classes, so the prewarmed classes were
+    # evicted and every pass recompiled ~315 of them. get_spark sizes
+    # the cache (kgx/spark/session.py); with it a repeat pass
+    # compiles ~4 (BENCH/codegen_shapes.md, round-5 section).
     prewarm_dir = os.environ.get(
         "SPARK_GRAFT_PREWARM_DIR",
         os.path.join(os.path.dirname(SF_DIR.rstrip("/")), "sf0.001"),

@@ -2566,9 +2566,8 @@ def udf_grouped_map(spark, sf):
     " CAST(SUM(l_orderkey) AS BIGINT) AS key_sum FROM lineitem",
 )
 def udf_map_partitions(spark, sf):
-    """mapInPandas per-partition counters (the lineage-metrics pattern,
-    kgx.spark.run.partition_lineage) folded to a partitioning-invariant
-    total so DuckDB can value-check it."""
+    """mapInPandas per-partition counters (rows, key sum) folded to a
+    partitioning-invariant total so DuckDB can value-check it."""
     schema = "p_rows bigint, p_keysum bigint"
 
     def counters(batches):

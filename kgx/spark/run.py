@@ -15,9 +15,7 @@ under partitioning/parallelism; this is what the local[8]-vs-local[32]
 equality assertion in bench uses), and per-output-file counters
 (rows, bytes) come from the parquet footers (driver-side metadata
 read). No second scan of the data per stage — at 100 TB a re-scan per
-stage would double the pipeline's IO. A deep per-partition hash pass
-(`partition_lineage`, mapInPandas) remains available for audits and is
-exercised in tests.
+stage would double the pipeline's IO.
 
 CLI (also the spark-submit entry point; see scripts/submit.sh):
 
@@ -30,13 +28,10 @@ CLI (also the spark-submit entry point; see scripts/submit.sh):
 from __future__ import annotations
 
 import argparse
-import hashlib
 import json
 import os
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -66,48 +61,6 @@ METRICS_SCHEMA = (
 )
 
 
-def partition_lineage(df: DataFrame, run_id: str, stage: str,
-                      table: str) -> DataFrame:
-    """One row per partition: rows, approx bytes, order-insensitive
-    content hash. Pure mapInPandas (Arrow-batched, no per-row Python
-    beyond pandas' own vectorized ops)."""
-    cols = df.columns
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from pyspark import TaskContext
-
-        pid = TaskContext.get().partitionId() if TaskContext.get() else -1
-        rows = 0
-        nbytes = 0
-        acc = 0
-        for pdf in batches:
-            rows += len(pdf)
-            nbytes += int(pdf.memory_usage(index=False, deep=True).sum())
-            joined = pdf.astype(str).agg("\x1f".join, axis=1)
-            for s in joined:
-                h = hashlib.sha256(s.encode("utf-8", "replace")).digest()
-                acc = (acc + int.from_bytes(h[:8], "big")) % (1 << 63)
-        yield pd.DataFrame(
-            {
-                "run_id": [run_id],
-                "stage": [stage],
-                "table": [table],
-                "partition_id": [pid],
-                "rows": [rows],
-                "bytes": [nbytes],
-                "content_hash": [format(acc, "016x")],
-            }
-        )
-
-    return df.select(cols).mapInPandas(fn, METRICS_SCHEMA)
-
-
-def table_content_hash(metrics_rows: list[dict]) -> str:
-    """Partitioning-invariant table hash: sum of partition hashes."""
-    acc = sum(int(r["content_hash"], 16) for r in metrics_rows) % (1 << 63)
-    return format(acc, "016x")
-
-
 def content_sig_col(df: DataFrame):
     """Order/partitioning-invariant content signature aggregate:
     sum of per-row murmur3 hashes, computed JVM-side inside whatever
@@ -119,6 +72,25 @@ def content_sig_col(df: DataFrame):
     return F.sum(
         F.hash(*[F.col(c) for c in df.columns]).cast("bigint")
     ).alias("sig")
+
+
+def codegen_counters(spark: SparkSession) -> tuple[int, int] | None:
+    """(classes compiled, compile ns) so far in this JVM, from Spark's
+    codegen instrumentation: the class count of
+    CodegenMetrics.METRIC_COMPILATION_TIME and CodeGenerator's exact
+    compile-time total (the histogram's own values are a 1028-entry
+    sample, so their sum stops being a total once a JVM has compiled
+    more). JVM-wide, so concurrent jobs in the same JVM count too.
+    None where the JVM is not reachable (e.g. Spark Connect)."""
+    try:
+        jvm = spark._jvm
+        hist = (jvm.org.apache.spark.metrics.source.CodegenMetrics
+                .METRIC_COMPILATION_TIME())
+        gen = jvm.org.apache.spark.sql.catalyst.expressions.codegen \
+            .CodeGenerator
+        return int(hist.getCount()), int(gen.compileTime())
+    except Exception:
+        return None
 
 
 def load_dims(spark: SparkSession, dims_dir: str,
@@ -175,6 +147,10 @@ class Runner:
         self._artifact_obj = None
         self.events: list[dict] = []
         self._metrics_rows: list[dict] = []
+        # classes Spark's code generator compiled during the last run()
+        # and their compile time: {"classes", "compile_s"}, or None
+        # when Spark's codegen counters are not reachable
+        self.codegen: dict | None = None
 
     # -- plumbing ------------------------------------------------------
 
@@ -299,6 +275,7 @@ class Runner:
         if unknown:
             raise SystemExit(
                 f"unknown stage(s) {unknown}; valid: {', '.join(STAGES)}")
+        before = codegen_counters(self.spark)
         try:
             for stage in wanted:
                 getattr(self, f"stage_{stage}")()
@@ -306,6 +283,11 @@ class Runner:
                     break
         finally:
             self.flush_metrics()
+            after = codegen_counters(self.spark)
+            self.codegen = None if before is None or after is None else {
+                "classes": after[0] - before[0],
+                "compile_s": round((after[1] - before[1]) / 1e9, 3),
+            }
         return self.events
 
     def stage_ingest(self):
@@ -497,6 +479,7 @@ def main(argv=None) -> dict:
         "run_id": args.run_id,
         "wall_s": round(time.time() - t0, 3),
         "stages": events,
+        "codegen": runner.codegen,
     }
     print(json.dumps(report))
     return report

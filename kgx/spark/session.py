@@ -1,7 +1,9 @@
 """SparkSession factory with the scale-oriented defaults of SURVEY.md §4.
 
 AQE on (coalesce + skew-join split), Arrow on for the pandas-UDF hot
-path, UTC session timezone (fixture timestamps are tz-naive UTC micros).
+path, UTC session timezone (fixture timestamps are tz-naive UTC micros),
+and a codegen cache sized to the pipeline's working set. `extra`
+overrides any default.
 """
 
 from __future__ import annotations
@@ -9,6 +11,19 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# Size of Spark's compiled-class cache (spark.sql.codegen.cache.maxEntries),
+# so the pipeline's generated code stays compiled across passes and
+# micro-batches. One Runner pass (~90 jobs) touches ~300 distinct
+# generated classes; with Spark's default 100-entry LRU each class was
+# evicted before its next use, so every pass recompiled them all.
+# Measured on fixtures/t1 (local[4], 4 vCPU): a repeat pass in the same
+# session compiled 314 classes in 2.2 s at 100 entries, and 4 classes in
+# 0.05 s at 1024 (first pass: 321 vs 299); kept classes also stay JIT-
+# compiled. 1024 leaves ~3x headroom over the working set. It is a
+# STATIC conf: it only takes effect when the JVM's first session is
+# created.
+CODEGEN_CACHE_MAX_ENTRIES = 1024
 
 
 def get_spark(
@@ -33,6 +48,8 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("KGX_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
+        .config("spark.sql.codegen.cache.maxEntries",
+                str(CODEGEN_CACHE_MAX_ENTRIES))
     )
     if extra:
         for k, v in extra.items():

@@ -21,7 +21,6 @@ from kgx.contract import (
     LSH_BANDS,
     LSH_ROWS,
     TAGS,
-    char_bigrams,
     minhash_signature,
 )
 from kgx.tagcore import (
@@ -221,12 +220,6 @@ def jaccard_col(a: str, b: str):
     inter = F.size(F.array_intersect(ga, gb))
     den = F.size(ga) + F.size(gb) - inter
     return F.when(den == 0, F.lit(1.0)).otherwise(inter / den)
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def bigrams_udf(norms: pd.Series) -> pd.Series:
-    """Distinct char bigrams (used by the dedup/text harness ops)."""
-    return pd.Series([char_bigrams(n) for n in norms.fillna("")])
 
 
 @F.pandas_udf(T.ArrayType(T.IntegerType()))

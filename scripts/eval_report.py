@@ -9,7 +9,8 @@
    the Spark tagger UDF on each tier's char-BIO eval fixture.
 3. Per-table row counts, both engines.
 
-Writes EVAL.md + prints one JSON line per tier.
+Writes EVAL.md + prints one JSON line per tier; exits non-zero when
+any tier's Spark tagger diverges from the oracle tagger.
 
 Usage: python scripts/eval_report.py [--tiers t2,t2_zh]
 """
@@ -172,14 +173,14 @@ def evaluate(spark, tier: str,
     return out, md
 
 
-def main() -> None:
+def main(argv=None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--tiers", default="t2,t2_zh,t2_noisy")
     ap.add_argument("--v2-tiers", default="t2,t2_zh,t2_noisy",
                     help="comma-separated tiers to additionally "
                     "evaluate with the second tagger artifact "
                     "(empty to skip)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
     tiers = args.tiers.split(",")
 
     from kgx.spark.session import get_spark
@@ -239,6 +240,13 @@ def main() -> None:
         f.write("\n".join(md))
     for out in outs:
         print(json.dumps(out))
+    diverged = [f"{o['tier']}/{o['artifact']}" for o in outs
+                if o["tagger_diverged_sentences"] > 0]
+    if diverged:
+        # the Spark-equals-oracle tagger equality is the hard gate:
+        # a diverged tier fails the run, not just its EVAL.md row
+        sys.exit("tagger diverged from the sequential oracle on "
+                 + ", ".join(diverged))
 
 
 if __name__ == "__main__":
